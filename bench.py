@@ -33,7 +33,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from museum_image_etl_gridfs_spark.hostmetrics import tree_cpu_s
+from museum_image_etl_gridfs_spark.hostmetrics import steal_cs, tree_cpu_s
 from museum_image_etl_gridfs_spark.operators.lifecycle import release_checkpoints
 from museum_image_etl_gridfs_spark.plans import all_queries
 from museum_image_etl_gridfs_spark.session import get_spark
@@ -126,12 +126,6 @@ def main() -> None:
     # mean would measure the neighbors. One broken query must never
     # kill the whole bench: it is recorded under "errors" and excluded
     # from the total.
-    def _steal_cs() -> int:
-        try:
-            return int(open("/proc/stat").readline().split()[8])
-        except (OSError, IndexError, ValueError):
-            return 0
-
     # pre-flight window gate (VERDICT r10 item 5, tightened from the
     # r8 single-retry probe): round 10 produced ZERO clean headline
     # readings because one bounded retry gives up inside a multi-minute
@@ -148,9 +142,9 @@ def main() -> None:
     preflight: dict = {"probes": [], "clean": False, "retried": False}
 
     def _probe_window() -> tuple[float, float]:
-        s0 = _steal_cs()
+        s0 = steal_cs()
         time.sleep(2.0)
-        steal_pct = (_steal_cs() - s0) / (2.0 * n_cpus)  # % of one cpu
+        steal_pct = (steal_cs() - s0) / (2.0 * n_cpus)  # % of one cpu
         return os.getloadavg()[0], steal_pct
 
     wait_s = int(os.environ.get("SPARK_GRAFT_BENCH_PREFLIGHT_WAIT", "45"))
@@ -187,7 +181,7 @@ def main() -> None:
     preflight["loadavg1"] = preflight["probes"][-1]["loadavg1"]
     preflight["steal_pct"] = preflight["probes"][-1]["steal_pct"]
 
-    steal0, wall0 = _steal_cs(), time.perf_counter()
+    steal0, wall0 = steal_cs(), time.perf_counter()
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     timings: dict[str, float] = {}
     #: noise ledger OF THE MIN REP per query — the committed headline
@@ -205,12 +199,12 @@ def main() -> None:
             # (eager vocab rank / checkpoint in the simjoin) are
             # engine work and belong in the query's number — see
             # module docstring for the r8 semantics change
-            s0, c0 = _steal_cs(), tree_cpu_s()
+            s0, c0 = steal_cs(), tree_cpu_s()
             t0 = time.perf_counter()
             df = qs[name].build(spark, sf_dir)
             _materialize(df)
             dt = time.perf_counter() - t0
-            d_steal = _steal_cs() - s0
+            d_steal = steal_cs() - s0
             if name not in timings or dt < timings[name]:
                 timings[name] = round(dt, 4)
                 query_noise[name] = {
@@ -288,7 +282,7 @@ def main() -> None:
         # lets a reader adjudicate "regression vs noisy neighbor"
         # mechanically instead of re-running blind.
         "noise": {
-            "steal_cs": _steal_cs() - steal0,
+            "steal_cs": steal_cs() - steal0,
             "wall_s": round(wall, 1),
             "loadavg1": round(os.getloadavg()[0], 2),
             "preflight": preflight,

@@ -1,9 +1,8 @@
-"""Surrogate keys and portable deterministic hashing.
+"""Portable deterministic hashing.
 
 The reference generates per-row ObjectId surrogate keys
-(``str(ObjectId())``, ``src/ingestion.py:60``) — semantics required:
-uniqueness only. We provide both a random form (``uuid()``) and a
-deterministic content-derived form (sha2) for testability.
+(``str(ObjectId())``, ``src/ingestion.py:60``); no query here needs
+one — every table already carries an integer source key.
 
 ``portable_bucket`` is a multiplicative hash (Knuth's 2654435761)
 expressible identically in Spark and ANSI SQL — used for the
@@ -20,17 +19,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 KNUTH = 2654435761  # golden-ratio multiplier, fits results in int64 for keys < 2^32
-
-
-def surrogate_key() -> Column:
-    """Random unique row id (ObjectId-equivalent)."""
-    return F.expr("uuid()")
-
-
-def deterministic_key(*cols: Column | str) -> Column:
-    """Content-derived stable id: sha2 over concatenated columns."""
-    parts = [F.col(c) if isinstance(c, str) else c for c in cols]
-    return F.sha2(F.concat_ws("\x1f", *[p.cast("string") for p in parts]), 256)
 
 
 def portable_bucket(key: Column | str, n_buckets: int = 100) -> Column:

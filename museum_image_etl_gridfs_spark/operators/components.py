@@ -101,9 +101,6 @@ def connected_components(
         labels_cp = new_cp
         labels = new_cp.select("vertex", "label")
         if changed == 0:
-            # measurement hook (r13): rounds-to-convergence, readable
-            # by benchmarks/tests without changing the return type
-            connected_components.last_rounds = _round + 1
             release_df(sym)  # the returned labels no longer need sym
             return labels.select("vertex", F.col("label").alias("component"))
     raise RuntimeError(f"did not converge in {max_iterations} iterations")

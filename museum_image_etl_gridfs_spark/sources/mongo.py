@@ -147,17 +147,3 @@ def write_gridfs(
         )
 
     df.foreachPartition(handle)
-
-
-def read_collection(
-    spark, uri: str, db_name: str, collection: str, schema: str
-) -> DataFrame:
-    """S6 source: full-collection scan through a single connection on
-    the driver — only suitable for small control collections; bulk
-    data should land in Parquet (the engine's durable medium, §3.3).
-    """
-    _require_pymongo()
-    import pymongo
-
-    docs = list(pymongo.MongoClient(uri)[db_name][collection].find({}, {"_id": 0}))
-    return spark.createDataFrame(docs, schema)

@@ -11,11 +11,19 @@ sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 )
 
+import pytest  # noqa: E402
+
 from plan_audit import EXPECTED_PYTHON, audit, read_committed  # noqa: E402
 
 
-def test_no_unexpected_python_nodes_anywhere(spark, sf_dir):
-    results = audit(spark, sf_dir)
+@pytest.fixture(scope="module")
+def full_audit(spark, sf_dir):
+    """One audit of the whole registry, shared by the registry-wide tests."""
+    return audit(spark, sf_dir)
+
+
+def test_no_unexpected_python_nodes_anywhere(full_audit):
+    results = full_audit
     assert len(results) >= 100  # the whole registry got audited
     offenders = {
         name: row["python"]
@@ -34,7 +42,7 @@ def test_no_unexpected_python_nodes_anywhere(spark, sf_dir):
     assert stale == set(), f"whitelisted but Python-free now: {stale}"
 
 
-def test_plan_features_match_committed_audit(spark, sf_dir):
+def test_plan_features_match_committed_audit(full_audit):
     """The full plan-regression gate: every query's shuffle /
     broadcast / scan / pushed-filter counts must equal the committed
     PLAN_AUDIT.md row. A plan regression (or improvement) fails here
@@ -43,7 +51,7 @@ def test_plan_features_match_committed_audit(spark, sf_dir):
     """
     committed = read_committed()
     assert len(committed) >= 100, "PLAN_AUDIT.md missing or truncated"
-    live = audit(spark, sf_dir)
+    live = full_audit
     drift: dict[str, str] = {}
     for name, row in live.items():
         if "error" in row:

@@ -1,18 +1,31 @@
-"""Registry + driver-contract smoke: every registered query builds a
-DataFrame at sf0.001 with a stable, well-formed schema; oracle SQL
-parses in DuckDB. (Full value comparison runs in
-tools/check_correctness.py at sf0.01 — this is the fast gate.)
+"""Registry + driver-contract gate at sf0.001.
+
+Every registered query builds a DataFrame with a well-formed schema and
+is fully materialized (``toPandas()``; a ``count()`` would let Catalyst
+prune the computed columns away). Every oracle-backed query is then
+value-checked against its DuckDB oracle — schema, row count and
+order-insensitive value hash, through the same ``compare`` that
+tools/check_correctness.py applies at any scale factor. The no-oracle
+queries' values are pinned by the full goldens in tests/test_goldens.py.
 """
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
-from museum_image_etl_gridfs_spark.catalog import TABLES
+from tools.check_correctness import compare, duck_connection, normalize
+from tools.make_goldens import FULL_GOLDENS
+from museum_image_etl_gridfs_spark.operators.lifecycle import release_checkpoints
 from museum_image_etl_gridfs_spark.plans import all_queries
 
 QUERIES = all_queries()
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    con = duck_connection(sf_dir)
+    yield con
+    con.close()
 
 
 def test_registry_nonempty_and_named():
@@ -21,96 +34,21 @@ def test_registry_nonempty_and_named():
         assert q.name == name and q.doc, name
 
 
-def test_driver_prefix_rotates_stalest_first():
-    """The driver verifies a 50-row prefix: sentinels must lead, then
-    at most NEVER_GREEN_CAP never-driver-green oracle-checkable
-    queries (a new-query wave cannot starve the rotation), then
-    oracle-checkable queries ascending last-green driver round; when
-    the trickle condition holds, exactly one no-oracle query (oldest
-    driver contact first) takes the final prefix slot so rows>0
-    evidence in the driver env accrues to the golden-pinned queries
-    too."""
-    from museum_image_etl_gridfs_spark.plans.registry import (
-        DRIVER_PREFIX,
-        NEVER_GREEN_CAP,
-        _SENTINELS,
-    )
-    from museum_image_etl_gridfs_spark.plans.staleness import LAST_CHECKED
-
-    names = list(QUERIES)
-    assert names[: len(_SENTINELS)] == list(_SENTINELS) or set(
-        names[: len(_SENTINELS)]
-    ) == set(_SENTINELS)
-    prefix = names[:DRIVER_PREFIX]
-    body = prefix[len(_SENTINELS):]
-    # never-green cap: at most NEVER_GREEN_CAP rows with no prior green
-    # oracle-checkable round inside the prefix body (excluding the
-    # optional no-oracle trickle slot at the end)
-    oracle_body = [n for n in body if QUERIES[n].oracle is not None]
-    never = [n for n in oracle_body if LAST_CHECKED.get(n, 0) == 0]
-    assert len(never) <= NEVER_GREEN_CAP
-    # never-green rows lead the body
-    assert oracle_body[: len(never)] == never
-    # the rest ascend by last-green round (stalest first)
-    rounds = [LAST_CHECKED.get(n, 0) for n in oracle_body[len(never):]]
-    assert rounds == sorted(rounds)
-    # at most ONE no-oracle query in the prefix, and only in the last slot
-    trickle = [n for n in body if QUERIES[n].oracle is None]
-    assert len(trickle) <= 1
-    if trickle:
-        assert body[-1] == trickle[0]
-        # the trickle slot drains the explicit VERDICT queue first
-        # (each round ships new golden-pinned queries at last=0, so
-        # oldest-contact-first alone would starve the backlog), then
-        # falls back to oldest driver contact
-        from museum_image_etl_gridfs_spark.plans.registry import (
-            _NO_ORACLE_FIRST,
-        )
-
-        queued = [n for n in _NO_ORACLE_FIRST if n in QUERIES]
-        if queued:
-            assert trickle[0] == queued[0]
-        else:
-            all_no_oracle = [
-                n for n in QUERIES if QUERIES[n].oracle is None
-            ]
-            oldest = min(
-                all_no_oracle, key=lambda n: LAST_CHECKED.get(n, 0)
-            )
-            assert LAST_CHECKED.get(trickle[0], 0) == LAST_CHECKED.get(
-                oldest, 0
-            )
-    # no oracle-checkable query outside the prefix is staler than any
-    # non-sentinel inside it (the rotation spends budget on the stalest)
-    outside = [
-        n
-        for n in names[DRIVER_PREFIX:]
-        if QUERIES[n].oracle is not None and LAST_CHECKED.get(n, 0) > 0
-    ]
-    if outside and rounds:
-        assert min(LAST_CHECKED[n] for n in outside) >= rounds[-1]
-
-
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_builds_and_runs(spark, sf_dir, name):
+def test_query_builds_and_runs(spark, sf_dir, duck, name):
     q = QUERIES[name]
-    df = q.build(spark, sf_dir)
-    assert df.columns, name
-    assert not any(c.startswith("__") for c in df.columns), name
-    assert df.count() >= 0  # executes the plan
-
-
-def test_oracles_parse_in_duckdb(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    for name, q in QUERIES.items():
-        if q.oracle is None:
-            continue
-        cols = [d[0] for d in con.execute(q.oracle).description]
-        assert cols, name
+    try:
+        df = q.build(spark, sf_dir)
+        assert df.columns, name
+        assert not any(c.startswith("__") for c in df.columns), name
+        got = df.toPandas()
+    finally:
+        release_checkpoints(spark)
+    if q.oracle is None:
+        assert name in FULL_GOLDENS, f"{name}: no oracle and no full golden"
+        return
+    want = duck.execute(q.oracle).df()
+    assert compare(normalize(got), normalize(want)) == "OK", name
 
 
 def test_driver_entry_contract(spark):

@@ -2,8 +2,10 @@
 
 Runs every registered query on Spark and its DuckDB oracle on the
 same parquet tables, then compares row count, normalized schema, and
-an order-insensitive value hash. Strictly harsher than necessary is
-fine — if this passes, the driver's comparison should too.
+an order-insensitive value hash (:func:`compare`, which
+``tests/test_registry.py`` also runs on every oracle at sf0.001).
+Strictly harsher than necessary is fine — if this passes, the
+driver's comparison should too.
 
 Usage:
     python tools/check_correctness.py [--sf-dir /root/testdata/sf0.01] [names...]
@@ -25,22 +27,10 @@ import duckdb
 import pandas as pd
 
 from museum_image_etl_gridfs_spark.catalog import TABLES
+from museum_image_etl_gridfs_spark.hostmetrics import steal_cs, tree_cpu_s
 from museum_image_etl_gridfs_spark.operators.lifecycle import release_checkpoints
 from museum_image_etl_gridfs_spark.plans import all_queries
 from museum_image_etl_gridfs_spark.session import get_spark
-
-
-def _steal_cs() -> int:
-    """Hypervisor steal time (centiseconds, all CPUs) from /proc/stat."""
-    try:
-        return int(open("/proc/stat").readline().split()[8])
-    except (OSError, IndexError, ValueError):
-        return 0
-
-
-from museum_image_etl_gridfs_spark.hostmetrics import (  # noqa: E402
-    tree_cpu_s as _tree_cpu_s,
-)
 
 
 class _NoiseClock:
@@ -51,14 +41,14 @@ class _NoiseClock:
     on identical data, unadjudicable without the ledger)."""
 
     def start(self) -> None:
-        self._steal0, self._wall0 = _steal_cs(), time.time()
+        self._steal0, self._wall0 = steal_cs(), time.time()
         self._load0 = os.getloadavg()[0]
-        self._cpu0 = _tree_cpu_s()
+        self._cpu0 = tree_cpu_s()
 
     def block(self) -> dict:
         wall = time.time() - self._wall0
         return {
-            "steal_cs": _steal_cs() - self._steal0,
+            "steal_cs": steal_cs() - self._steal0,
             "wall_s": round(wall, 1),
             # loadavg at BOTH ends of the row: a contended middle is
             # invisible to an end-only sample when the row's own last
@@ -69,7 +59,7 @@ class _NoiseClock:
             # process-tree CPU burned by the row (driver + JVM +
             # Python workers): contention-immune — compare across
             # rounds where wall_s cannot be trusted
-            "task_cpu_s": round(_tree_cpu_s() - self._cpu0, 1),
+            "task_cpu_s": round(tree_cpu_s() - self._cpu0, 1),
         }
 
 
@@ -111,6 +101,26 @@ def value_hash(df: pd.DataFrame) -> str:
                 h.update(str(v).encode())
         h.update(b"\x01")
     return h.hexdigest()
+
+
+def compare(s_n: pd.DataFrame, o_n: pd.DataFrame) -> str:
+    """Compare a Spark result with its oracle result, both already
+    passed through :func:`normalize`: schema, then row count, then
+    value hash.
+
+    Returns ``"OK"`` or the first mismatch status; on a hash mismatch
+    the first differing cells are printed.
+    """
+    if list(s_n.columns) != list(o_n.columns):
+        return f"SCHEMA_MISMATCH spark={list(s_n.columns)} oracle={list(o_n.columns)}"
+    if len(s_n) != len(o_n):
+        return f"ROWCOUNT_MISMATCH spark={len(s_n)} oracle={len(o_n)}"
+    if value_hash(s_n) != value_hash(o_n):
+        diff = s_n.compare(o_n)
+        if not diff.empty:
+            print(diff.head(10))
+        return "HASH_MISMATCH"
+    return "OK"
 
 
 def main() -> int:
@@ -291,16 +301,7 @@ def main() -> int:
             results[name] = {"status": "NORMALIZE_ERROR", "error": str(e)[:500]}
             print(f"[FAIL-norm] {name}: {str(e)[:300]}")
             continue
-        status = "OK"
-        if list(s_n.columns) != list(o_n.columns):
-            status = f"SCHEMA_MISMATCH spark={list(s_n.columns)} oracle={list(o_n.columns)}"
-        elif len(s_n) != len(o_n):
-            status = f"ROWCOUNT_MISMATCH spark={len(s_n)} oracle={len(o_n)}"
-        elif value_hash(s_n) != value_hash(o_n):
-            status = "HASH_MISMATCH"
-            diff = s_n.compare(o_n) if s_n.shape == o_n.shape else None
-            if diff is not None and not diff.empty:
-                print(diff.head(10))
+        status = compare(s_n, o_n)
         results[name] = {
             "status": status,
             "rows": len(s_n),

@@ -43,12 +43,9 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_CPUS = os.cpu_count() or 32
 
+sys.path.insert(0, ROOT)
 
-def _steal_cs() -> int:
-    try:
-        return int(open("/proc/stat").readline().split()[8])
-    except (OSError, IndexError, ValueError):
-        return 0
+from museum_image_etl_gridfs_spark.hostmetrics import steal_cs  # noqa: E402
 
 
 def _steal_share(noise: dict | None) -> float:
@@ -90,9 +87,9 @@ def _wait_clean(budget_s: float, wait_s: float = 20.0) -> dict:
     probe so the caller can ledger it."""
     t0 = time.monotonic()
     while True:
-        s0 = _steal_cs()
+        s0 = steal_cs()
         time.sleep(5.0)
-        share = (_steal_cs() - s0) / (5.0 * N_CPUS)
+        share = (steal_cs() - s0) / (5.0 * N_CPUS)
         load = os.getloadavg()[0]
         probe = {"steal_pct_cpu": round(share, 2), "loadavg1": round(load, 2)}
         if share < 1.0 and load < N_CPUS / 4:
