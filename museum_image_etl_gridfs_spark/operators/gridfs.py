@@ -26,24 +26,31 @@ from pyspark.sql import functions as F
 GRIDFS_CHUNK_SIZE = 261120  # 255 KB, GridFS default
 
 
+def chunk_count(data_col, chunk_size: int = GRIDFS_CHUNK_SIZE) -> F.Column:
+    """Number of GridFS chunks of a blob, ``greatest(ceil(len/size), 1)``
+    — the length of :func:`chunk_pieces`, read off the blob length
+    without slicing it (NULL counts 1, like chunk_pieces' one NULL
+    piece; pinned in tests/test_gridfs.py)."""
+    c = F.col(data_col) if isinstance(data_col, str) else data_col
+    return F.greatest(F.ceil(F.length(c) / F.lit(chunk_size)), F.lit(1)).cast("int")
+
+
 def chunk_pieces(data_col, chunk_size: int = GRIDFS_CHUNK_SIZE) -> F.Column:
     """The GridFS write-side layout as a COLUMN: the ordered array of
     ``chunk_size`` byte slices of a blob. :func:`chunk_binary` is this
     expression followed by a posexplode; consumers that only need
-    per-file layout facts (chunk count, lengths) should aggregate the
-    array directly — same slicing arithmetic, no row expansion, no
-    shuffle (array_size(chunk_pieces(b)) ≡ chunk_binary(...).groupBy
-    count, pinned in tests/test_gridfs.py).
+    per-file layout facts (piece lengths) should aggregate the array
+    directly — same slicing arithmetic, no row expansion, no shuffle
+    (array_size(chunk_pieces(b)) ≡ chunk_binary(...).groupBy count,
+    pinned in tests/test_gridfs.py). The count alone is
+    :func:`chunk_count`, which slices nothing.
 
     Empty blobs yield a single empty piece (GridFS stores zero chunks
     for empty files; keeping one empty row preserves the round-trip
     identity for length 0)."""
     c = F.col(data_col) if isinstance(data_col, str) else data_col
-    n_chunks = F.greatest(
-        F.ceil(F.length(c) / F.lit(chunk_size)), F.lit(1)
-    ).cast("int")
     return F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
+        F.sequence(F.lit(0), chunk_count(c, chunk_size) - 1),
         lambda i: c.substr(i * chunk_size + 1, F.lit(chunk_size)),
     )
 

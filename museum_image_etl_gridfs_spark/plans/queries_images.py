@@ -3,9 +3,14 @@
 The fixtures carry no real blobs, so images are synthesized
 deterministically from ``doc_id`` (operators.images.synthesize_images)
 and pushed through the REAL Spark plumbing: binary column -> Arrow
-batch -> decode -> numpy resize -> re-encode -> typed metadata. The
-oracle states the arithmetic consequences (dims, byte lengths,
-statuses), so the whole decode-transform-encode path is hash-checked.
+batch -> RAW0 header parse -> numpy nearest-neighbor resize ->
+re-encoded blobs -> typed metadata. Every image stage is one
+``mapInArrow`` stage; RawCodec rows are processed a whole Arrow batch
+at a time over the column's buffers, and only rows it cannot batch
+(or a non-Raw codec such as PILCodec) take the per-row codec path
+(operators/images.py states the codec contract). The oracle states the
+arithmetic consequences (dims, byte lengths, statuses), so the whole
+decode-transform-encode path is hash-checked.
 """
 
 from __future__ import annotations
@@ -43,12 +48,13 @@ _HEADER = 12  # RAW0 header bytes
 )
 def multimodal_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image ETL slice: synthesize -> decode -> resize -> encode ->
-    feature-extract, all distributed, no shuffle (C6 at scale).
+    feature-extract, three mapInArrow stages, no shuffle (C6 at scale).
 
     ``src_pixels`` is read JVM-side from the typed header
     (decoded_length — no Python decode for planning-level metadata);
-    ``out_w``/``out_h`` come from re-decoding the transformed blob,
-    proving the resize actually happened.
+    ``out_w``/``out_h`` come from image_features' parse of the
+    transformed blob's header and its exact length check, proving the
+    resize actually happened.
     """
     docs = load(spark, "documents", sf_dir).select("doc_id")
     imgs = synthesize_images(
@@ -93,21 +99,19 @@ def image_etl_gridfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fs_transformed_chunks_view.png: only n=0; BASELINE.md).
 
     ONE linear pass, ZERO shuffles past the byte-sizing exchange:
-    synthesize -> decode -> resize -> encode -> per-doc chunk layout
-    (``chunk_pieces`` — the identical slicing arithmetic
-    ``chunk_binary`` explodes, aggregated in place; explode +
-    reassembly are oracle-exercised by gridfs_chunk_plan /
-    gridfs_roundtrip). The r7 shape instead JOINED three branches
-    (blobs x descriptors x chunk counts) all derived from the same two
-    mapInPandas stages — Spark cannot common-subexpression a Python
-    stage, so the 224x224 synth+resize ran once per branch and the r8
-    solo-clean sf1 adjudication read 185 s engine-side (545 s in r7's
-    loadavg-39 sweep window). Single-pass + byte-sized partitions
+    synthesize -> transform (two Arrow-batched mapInArrow stages) ->
+    per-doc chunk layout. ``n_chunks`` is :func:`chunk_count`, the
+    chunk arithmetic read off the blob length; the slicing, explode
+    and reassembly themselves are oracle-exercised by
+    gridfs_chunk_plan / gridfs_roundtrip. The three outputs are
+    columns of one pass, not joined branches: Spark cannot
+    common-subexpression a Python stage, so each branch would re-run
+    the 224x224 synthesize + resize. Partitions are sized by bytes
     (~64 MB of output blobs per task, derived from the measured row
-    count — the SURVEY §4 "size by bytes, not rows" rule, now enforced
-    here and inside the operators rather than in a docstring).
+    count — the SURVEY §4 "size by bytes, not rows" rule, enforced
+    here and inside the operators).
     """
-    from ..operators.gridfs import GRIDFS_CHUNK_SIZE, chunk_pieces
+    from ..operators.gridfs import GRIDFS_CHUNK_SIZE, chunk_count
     from ..operators.images import bytes_sized_partitions
 
     docs = load(spark, "documents", sf_dir).select("doc_id")
@@ -126,7 +130,7 @@ def image_etl_gridfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return transformed.select(
         "doc_id",
         F.length("image_transformed").cast("long").alias("transformed_len"),
-        F.size(chunk_pieces("image_transformed", GRIDFS_CHUNK_SIZE))
+        chunk_count("image_transformed", GRIDFS_CHUNK_SIZE)
         .cast("long")
         .alias("n_chunks"),
         F.concat(F.col("doc_id").cast("string"), F.lit("_transformed.jpg")).alias(

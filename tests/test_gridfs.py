@@ -156,3 +156,27 @@ def test_chunk_pieces_matches_exploded_chunks(spark):
         assert n == len(via_rows[i]) == max(1, -(-len(blob) // CHUNK))
         assert pieces == via_rows[i]
         assert b"".join(pieces) == blob
+
+
+def test_chunk_count_matches_chunk_pieces_size(spark):
+    """chunk_count is the length of chunk_pieces without the slicing,
+    on every edge length and on NULL."""
+    from museum_image_etl_gridfs_spark.operators.gridfs import (
+        chunk_count,
+        chunk_pieces,
+    )
+
+    blobs = [b"", b"x", b"k" * (CHUNK * 3), b"k" * (CHUNK * 3 + 1), None]
+    df = spark.createDataFrame(list(enumerate(blobs)), "id long, blob binary")
+    rows = df.select(
+        "id",
+        chunk_count("blob", CHUNK).alias("count"),
+        F.size(chunk_pieces("blob", CHUNK)).alias("size"),
+    ).collect()
+    assert {r["id"]: (r["count"], r["size"]) for r in rows} == {
+        0: (1, 1),
+        1: (1, 1),
+        2: (3, 3),
+        3: (4, 4),
+        4: (1, 1),
+    }

@@ -2,18 +2,26 @@
 
 The container has no PIL, so the RawCodec path is the tested one —
 its resize is real numpy resampling, so the Spark plumbing (binary
-schema, Arrow batches, quarantine rows) is genuinely exercised.
+schema, Arrow batches, quarantine rows) is genuinely exercised. The
+batch kernels are checked against the per-row codec path on mixed
+batches (two sizes, truncated, wrong magic, zero dims, NULL).
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from museum_image_etl_gridfs_spark.operators.images import (
+    _HEADER,
     PILCodec,
     RawCodec,
+    _features_batch,
+    _raw_headers,
+    _transform_batch,
+    _transform_row,
     decoded_length,
     image_features,
     synthesize_images,
@@ -95,15 +103,13 @@ def test_pil_codec_gated():
             PILCodec.decode(b"\xff\xd8")
 
 
-def test_bounded_measured_skew_never_overshoots():
-    """ADVICE r8: a size-skewed batch (a few huge blobs among many
-    tiny ones) must never produce a slice whose measured bytes exceed
-    the target — the old mean-derived fixed row count did."""
-    import pandas as pd
-
+def test_slices_skew_never_overshoots():
+    """A size-skewed batch (a few huge blobs among many tiny ones) must
+    never produce a range whose bytes exceed the target — a
+    mean-derived fixed row count would."""
     from museum_image_etl_gridfs_spark.operators.images import (
         _TARGET_BATCH_BYTES,
-        _bounded_measured,
+        _slices,
     )
 
     # 990 tiny rows + 10 rows of 0.4*target each: the mean row size is
@@ -111,23 +117,87 @@ def test_bounded_measured_skew_never_overshoots():
     # catch several huge rows at once (>1x target).
     big = int(_TARGET_BATCH_BYTES * 0.4)
     sizes = [64] * 990 + [big] * 10
-    pdf = pd.DataFrame({"i": range(len(sizes)), "b": sizes})
-    slices = list(_bounded_measured(pdf, pdf["b"].tolist()))
-    assert sum(len(s) for s in slices) == len(pdf)
-    assert pd.concat(slices)["i"].tolist() == pdf["i"].tolist()  # order+cover
-    for s in slices:
-        assert s["b"].sum() <= _TARGET_BATCH_BYTES
+    ranges = list(_slices(sizes))
+    # in order and covering every row
+    assert [i for a, b in ranges for i in range(a, b)] == list(range(len(sizes)))
+    for a, b in ranges:
+        assert sum(sizes[a:b]) <= _TARGET_BATCH_BYTES
 
 
-def test_bounded_measured_single_oversize_row_gets_own_slice():
-    import pandas as pd
-
+def test_slices_single_oversize_row_gets_own_slice():
     from museum_image_etl_gridfs_spark.operators.images import (
         _TARGET_BATCH_BYTES,
-        _bounded_measured,
+        _slices,
     )
 
     sizes = [100, 3 * _TARGET_BATCH_BYTES, 100]
-    pdf = pd.DataFrame({"i": range(3), "b": sizes})
-    slices = list(_bounded_measured(pdf, sizes))
-    assert [s["i"].tolist() for s in slices] == [[0], [1], [2]]
+    assert list(_slices(sizes)) == [(0, 1), (1, 2), (2, 3)]
+
+
+def _mixed_blobs() -> list:
+    """Two source sizes plus every kind of row the batch kernels leave
+    to the per-row codec path."""
+    rng = np.random.default_rng(7)
+    a = RawCodec.encode(rng.integers(0, 256, (6, 8, 3), dtype=np.uint8))
+    b = RawCodec.encode(rng.integers(0, 256, (5, 3, 3), dtype=np.uint8))
+    return [
+        a,
+        b,
+        a[:-1],  # truncated
+        b"RAWX" + b[4:],  # wrong magic
+        _HEADER.pack(b"RAW0", 0, 4),  # zero-dimension header
+        None,
+        # negative width: the codec's reshape still infers a 1x1
+        # raster, so the per-row path returns a blob
+        _HEADER.pack(b"RAW0", -1, 1) + bytes(3),
+        b,
+        a,
+    ]
+
+
+class _PerRowRaw(RawCodec):
+    """RawCodec's format under another codec class, which the batch
+    kernels must send down the per-row path (as they do PILCodec)."""
+
+
+@pytest.mark.parametrize("codec", [RawCodec, _PerRowRaw])
+@pytest.mark.parametrize("typ", [pa.binary(), pa.large_binary()])
+def test_transform_batch_matches_per_row_codec(typ, codec):
+    """The batch kernel returns byte-identical blobs and identical
+    statuses to the per-row codec path, for both Arrow offset widths
+    and for sliced arrays (non-zero offset)."""
+    col = pa.array(_mixed_blobs(), typ)
+    for arr in (col, col.slice(2, 6)):
+        blobs, status = _transform_batch(arr, (4, 3), codec)
+        want = [_transform_row(RawCodec, b, (4, 3)) for b in arr.to_pylist()]
+        assert blobs.to_pylist() == [w[0] for w in want]
+        assert status.to_pylist() == [w[1] for w in want]
+    assert status.to_pylist()[:4] == [
+        "error:ValueError",
+        "error:ValueError",
+        "error:IndexError",
+        "error:TypeError",
+    ]
+
+
+def test_features_batch_matches_codec_over_mixed_sizes():
+    blobs = _mixed_blobs()
+    good = [blobs[i] for i in (0, 1, 7, 8)]  # two sizes, interleaved
+    width, height, means = _features_batch(pa.array(good), RawCodec)
+    for blob, w, h, m in zip(good, width.to_pylist(), height.to_pylist(), means.to_pylist()):
+        arr = RawCodec.decode(blob)
+        assert (h, w) == arr.shape[:2]
+        assert np.allclose(m, arr.mean(axis=(0, 1)), atol=1e-4)
+
+
+def test_raw_headers_large_binary_and_sliced():
+    blobs = _mixed_blobs()
+    want_ok = [True, True, False, False, False, False, False, True, True]
+    for typ in (pa.binary(), pa.large_binary()):
+        col = pa.array(blobs, typ)
+        ok, w, h = _raw_headers(col)
+        assert ok.tolist() == want_ok
+        assert (w[[0, 1]].tolist(), h[[0, 1]].tolist()) == ([8, 3], [6, 5])
+        ok, w, h = _raw_headers(col.slice(1, 7))
+        assert ok.tolist() == want_ok[1:8]
+        assert (w[-1], h[-1]) == (3, 5)
