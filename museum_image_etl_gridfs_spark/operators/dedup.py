@@ -27,8 +27,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..partitioning import spread
+from .. import partitioning
 
 
 def duplicate_groups(
@@ -84,14 +85,6 @@ def exact_dedup(df: DataFrame, columns: Sequence[str] | None = None) -> DataFram
 # Mersenne prime 2^31-1: keeps a*h + b < 2^62, inside int64 even with
 # ANSI overflow checking (Spark 4 default).
 _MERSENNE = (1 << 31) - 1
-
-#: ceiling (bytes, estimated as docs × (8·num_hashes + struct slack))
-#: under which the per-doc signature relation is BROADCAST into the
-#: post-candidate join instead of shuffle-joined. 64 MiB matches the
-#: session's autoBroadcastJoinThreshold; the checkpointed relation has
-#: no Catalyst stats, so the planner would never broadcast it unaided.
-_SIG_BROADCAST_MAX_BYTES = 64 << 20
-
 
 def _rand_coeffs(n: int, seed: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for universal hashing, via a simple
@@ -337,6 +330,13 @@ def minhash_near_duplicates(
     exchange ONLY in that under-split case; at 100 TB the scan's own
     splits provide the parallelism and no shuffle of (id, text) is
     emitted at all.
+
+    Eager work at build time: sizing the signature relation for its
+    broadcast gate runs one job over the sketch checkpoint, so the
+    whole corpus is sketched when this function is CALLED, not when
+    the returned DataFrame is first executed. A caller that builds the
+    query and never runs it still pays the sketch; release the blocks
+    with ``lifecycle.release_checkpoints`` as usual.
     """
     rows_per_band = num_hashes // bands
     if rows_per_band * bands != num_hashes:
@@ -357,7 +357,9 @@ def minhash_near_duplicates(
     ]
     if new_col:
         src_cols.append(F.col(new_col).cast("boolean").alias("is_new"))
-    src = spread(df, id_col, target=num_partitions).select(*src_cols)
+    src = partitioning.spread(df, id_col, target=num_partitions).select(
+        *src_cols
+    )
     fn, schema = _minhash_doc_rows(
         src.schema["id"], k, num_hashes, bands, seed, with_new=bool(new_col)
     )
@@ -456,14 +458,20 @@ def minhash_near_duplicates(
     # the band rows that survived the fp-collapse in a bucket with ≥2
     # distinct texts — usually a small fraction of the fan-out. The
     # per-doc sig relation reads the checkpoint (never re-sketches);
-    # it is broadcast when provably small (one cheap count over the
-    # checkpoint blocks — the size_gated_broadcast pattern), else a
-    # shuffle join that still moves each signature once instead of
-    # ``bands`` times.
-    sig_rel = sk.select("id", "sig")
-    sig_bytes = sk.count() * (num_hashes * 8 + 32)
-    if sig_bytes <= _SIG_BROADCAST_MAX_BYTES:
-        sig_rel = F.broadcast(sig_rel)
+    # it is broadcast when provably small (the signature gate in
+    # :mod:`..partitioning`: one aggregate job over the checkpoint
+    # blocks), else a shuffle join that still moves each signature
+    # once instead of ``bands`` times. A row costs the long array plus
+    # ~32 bytes of row/array headers, which also cover a fixed-width
+    # id; a string or binary id adds its byte length.
+    row_bytes = F.lit(num_hashes * 8 + 32)
+    if isinstance(sk.schema["id"].dataType, (T.StringType, T.BinaryType)):
+        row_bytes = row_bytes + F.coalesce(F.octet_length("id"), F.lit(0))
+    sig_rel = partitioning.broadcast_if_small(
+        sk.select("id", "sig"),
+        partitioning.SIG_BROADCAST_MAX_BYTES,
+        row_bytes=row_bytes,
+    )
     kept = kept.join(sig_rel, "id")
     assignments = F.concat(
         F.transform(

@@ -34,13 +34,13 @@ share a bucket and are ordered by the window's full key list.
 from __future__ import annotations
 
 import math
-import os
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import partitioning
 from .lifecycle import tracked_local_checkpoint
 
 
@@ -783,37 +783,6 @@ def grouped_rank_stats(
     return t.drop("__pid", "__goff", "__gn")
 
 
-#: input-size ceiling (bytes, Catalyst optimized-plan estimate) under
-#: which :func:`grouped_percentiles_auto` uses Spark's own Percentile
-#: aggregate. Measured at sf1 (60M lineitem rows): the buffer path
-#: runs the whole MAD query in ~6 s where the rank machinery takes
-#: 17 s (median) + 71 s (MAD) — the machinery pays an input
-#: checkpoint + probe + counts + full within-bucket sort, while
-#: Percentile's buffer is an OpenHashMap of value→count (O(distinct
-#: values) per group, NOT O(rows) — tiny for integral domains like
-#: quantities). The machinery is the escape hatch for CONTINUOUS
-#: value domains at corpus scale, where that map degenerates to
-#: O(rows)/group.
-PCTL_BUFFER_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_PCTL_BUFFER_MAX_BYTES", str(4 << 30))
-)
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's optimized-plan size estimate — plan-time, no job."""
-    try:
-        return int(
-            str(
-                df._jdf.queryExecution()  # noqa: SLF001
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-        )
-    except Exception:
-        return None
-
-
 def grouped_percentiles_auto(
     df: DataFrame,
     group_keys: Sequence[str],
@@ -823,23 +792,26 @@ def grouped_percentiles_auto(
     out_cols: Sequence[str],
     buckets_per_core: int = 4,
 ) -> DataFrame:
-    """Exact grouped percentiles with a SCALE-ADAPTIVE plan: below the
-    input-size gate, one ``F.percentile`` aggregate (single pass,
-    per-group value-count map — the measured-fastest exact form at
-    every SF the driver benches, see ``PCTL_BUFFER_MAX_BYTES``); above
-    it, :func:`grouped_exact_percentiles` (bounded per-task state, no
-    value buffers). Both paths are bit-identical —
+    """Exact grouped percentiles with a SCALE-ADAPTIVE plan: while the
+    input's plan size is small (the percentile gate in
+    :mod:`..partitioning`), one ``F.percentile`` aggregate (single
+    pass, per-group value-count map — the measured-fastest exact form
+    at every SF the driver benches); above it,
+    :func:`grouped_exact_percentiles` (bounded per-task state, no
+    value buffers). Both paths return the same rows, bit for bit —
     ``grouped_exact_percentiles`` reproduces Percentile's
-    interpolation arithmetic term for term, pinned against
-    ``F.percentile`` itself in tests/test_quantiles.py — so the gate
-    can never move a query's oracle hash.
+    interpolation arithmetic term for term and its NULL/NaN/empty
+    semantics, pinned against ``F.percentile`` itself in
+    tests/test_quantiles.py — so the gate can never move a query's
+    oracle hash.
     """
     if len(ps) != len(out_cols) or not ps:
         raise ValueError(
             "grouped_percentiles_auto: |ps| must equal |out_cols| >= 1"
         )
-    est = _plan_size_bytes(df)
-    if est is not None and est <= PCTL_BUFFER_MAX_BYTES:
+    if partitioning.is_small(
+        partitioning.plan_bytes(df), partitioning.PCTL_BUFFER_MAX_BYTES
+    ):
         return df.groupBy(*group_keys).agg(
             *[
                 F.percentile(value_col, F.lit(float(p))).alias(o)
@@ -892,12 +864,18 @@ def grouped_exact_percentiles(
     ``tests/test_quantiles.py`` against ``F.percentile`` itself, so
     swapping a query onto this operator cannot move its oracle hash.
 
-    Contracts: ``value_col`` numeric and NULL/NaN-free (Percentile
-    skips NULLs; this operator refuses them loudly via the range-id
-    probe, same as every operator in this module), group keys
-    NULL-safe (rank machinery handles NULL groups), ties in the value
-    are interchangeable at equal rank (equal values — interpolation
-    result identical regardless of which tied row takes which rank).
+    Value semantics are Percentile's, so :func:`grouped_percentiles_auto`
+    returns the same rows on both sides of its gate: NULL values are
+    skipped (a group whose values are all NULL yields NULLs), NaN
+    orders above +inf, and an empty input yields no rows. The rank
+    machinery needs a non-NULL, non-NaN lead key, so NULL values rank
+    in a subgroup of their own (``__null``) that contributes no value,
+    and NaN ranks as +inf with the ``__nan`` flag as the tie-breaker.
+
+    Contracts: ``value_col`` numeric, group keys NULL-safe (rank
+    machinery handles NULL groups), ties in the value are
+    interchangeable at equal rank (equal values — interpolation result
+    identical regardless of which tied row takes which rank).
     """
     if len(ps) != len(out_cols) or not ps:
         raise ValueError("grouped_exact_percentiles: |ps| must equal |out_cols| >= 1")
@@ -905,10 +883,20 @@ def grouped_exact_percentiles(
         if not 0.0 <= p <= 1.0:
             raise ValueError(f"percentile {p} outside [0, 1]")
     gks = list(group_keys)
+    v = F.col(value_col).cast("double")
+    nan = F.isnan(v)
     t = grouped_rank_stats(
-        df.select(*gks, value_col),
-        gks,
-        [value_col],
+        df.select(
+            *gks,
+            v.isNull().alias("__null"),
+            F.when(nan, F.lit(float("inf")))
+            .otherwise(F.coalesce(v, F.lit(0.0)))
+            .alias("__k"),
+            nan.cast("int").alias("__nan"),
+            v.alias("__v"),
+        ),
+        [*gks, "__null"],
+        ["__k", "__nan"],
         row_number_col="__rn",
         n_col="__n",
         buckets_per_core=buckets_per_core,
@@ -916,7 +904,8 @@ def grouped_exact_percentiles(
     # 0-based rank + the interpolation positions for every p; a row
     # survives iff it sits AT some p's floor or ceil rank. All pure
     # row-local arithmetic on (__rn, __n) — no extra shuffle before
-    # the final tiny aggregate.
+    # the final tiny aggregate. NULL-value rows keep a NULL size and
+    # value, so they only make their group appear.
     i0 = (F.col("__rn") - 1).cast("double")
     keep = F.lit(False)
     for p in ps:
@@ -925,8 +914,8 @@ def grouped_exact_percentiles(
     picked = t.filter(keep).select(
         *gks,
         i0.alias("__i"),
-        F.col("__n").alias("__gn2"),
-        F.col(value_col).cast("double").alias("__v"),
+        F.when(~F.col("__null"), F.col("__n")).alias("__gn2"),
+        "__v",
     )
     aggs = []
     for p, out in zip(ps, out_cols):
@@ -934,8 +923,10 @@ def grouped_exact_percentiles(
         v_lo = F.max(F.when(F.col("__i") == F.floor(pos), F.col("__v")))
         v_hi = F.max(F.when(F.col("__i") == F.ceil(pos), F.col("__v")))
         pos0 = F.lit(float(p)) * (F.max("__gn2") - 1).cast("double")
+        # Percentile returns the lower key itself when no interpolation
+        # is needed: an integral position, or equal keys at both ranks
         aggs.append(
-            F.when(F.ceil(pos0) == F.floor(pos0), v_lo)
+            F.when((F.ceil(pos0) == F.floor(pos0)) | (v_lo == v_hi), v_lo)
             .otherwise(
                 (F.ceil(pos0) - pos0) * v_lo + (pos0 - F.floor(pos0)) * v_hi
             )

@@ -63,24 +63,11 @@ of the training-data-pipeline extension surface.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-#: input-size ceiling (bytes, est. from the source's optimized-plan
-#: stats) under which :func:`duplicated_spans` materializes the gram
-#: inventory behind a tracked localCheckpoint instead of deriving it
-#: twice. The inventory is O(total tokens) rows × 3 longs — roughly
-#: corpus-sized storage — so the checkpoint is a win exactly while the
-#: executors can hold it (MEMORY_AND_DISK); past the gate the operator
-#: keeps the two-pass shape, whose second scan is linear and
-#: spill-free (the documented 100 TB trade). Env-overridable so a
-#: cluster with real aggregate storage can raise it.
-_INV_CKPT_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_INV_CKPT_MAX_BYTES", str(8 << 30))
-)
+from .. import partitioning
 
 
 def _maybe_checkpoint_inventory(src: DataFrame, occ: DataFrame) -> DataFrame:
@@ -90,23 +77,16 @@ def _maybe_checkpoint_inventory(src: DataFrame, occ: DataFrame) -> DataFrame:
     ``src``) is consumed twice by the dup-test + semi-join shape; at
     bench/fixture scale re-deriving it costs a full second
     scan + posexplode + window pass (27.1 task-CPU-s at sf0.1 — the #4
-    CPU burner in the r12 bench ledger). Below the gate the inventory
-    is materialized once; above it the relation is returned unchanged
-    and the caller's two-pass plan stands. The gate reads the SOURCE
-    relation's Catalyst size estimate — plan-time, no extra job.
+    CPU burner in the r12 bench ledger). While the SOURCE relation's
+    plan-time size estimate is small (the inventory gate in
+    :mod:`..partitioning`) the inventory is materialized once; above
+    it the relation is returned unchanged and the caller's two-pass
+    plan stands — its second scan is linear and spill-free (the
+    documented 100 TB trade).
     """
-    try:
-        est = int(
-            str(
-                src._jdf.queryExecution()  # noqa: SLF001
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-        )
-    except Exception:  # stats unavailable — keep the safe two-pass shape
-        return occ
-    if est > _INV_CKPT_MAX_BYTES:
+    if not partitioning.is_small(
+        partitioning.plan_bytes(src), partitioning.INVENTORY_CKPT_MAX_BYTES
+    ):
         return occ
     from .lifecycle import tracked_local_checkpoint
 
@@ -176,10 +156,8 @@ def gram_hash_occurrences(
     (windowing BY GRAM was rejected with measurements in round 6; BY
     DOC is bounded by document length).
     """
-    from ..partitioning import spread
-
     toks = norm_tokens(text_col)
-    exploded = spread(df, id_col).select(
+    exploded = partitioning.spread(df, id_col).select(
         F.col(id_col), F.posexplode(toks).alias("__i", "__tok")
     )
     w = Window.partitionBy(id_col).orderBy("__i")
@@ -387,8 +365,6 @@ def dup_ngram_char_fraction(
     /root/reference/src/transform_load.py); this operator is part of
     the LLM-curation extension surface.
     """
-    from ..partitioning import spread
-
     thr = dict(GOPHER_DUP_NGRAM_THRESHOLDS)
     if thresholds:
         thr.update(thresholds)
@@ -396,7 +372,7 @@ def dup_ngram_char_fraction(
     max_n = max(ns)
 
     toks = norm_tokens(text_col)
-    exploded = spread(df, id_col).select(
+    exploded = partitioning.spread(df, id_col).select(
         F.col(id_col).alias("id"),
         F.posexplode(toks).alias("__i", "__tok"),
     )
@@ -533,8 +509,6 @@ def substring_dedup_rewrite(
     dedup is whole-value $group, transform_load.py:48-50) — LLM
     curation extension surface.
     """
-    from ..partitioning import spread
-
     # same double-consumption shape as duplicated_spans (firsts
     # aggregate + removals join) — same size-gated materialization
     occ = _maybe_checkpoint_inventory(
@@ -579,7 +553,7 @@ def substring_dedup_rewrite(
         id_col, F.explode(F.sequence("__s", "__e")).alias("__idx")
     )
     toks = norm_tokens(text_col)
-    tokens = spread(df, id_col).select(
+    tokens = partitioning.spread(df, id_col).select(
         F.col(id_col), F.posexplode(toks).alias("__i0", "__tok")
     ).select(id_col, (F.col("__i0") + 1).cast("long").alias("__idx"), "__tok")
     kept = tokens.join(covered, [id_col, "__idx"], "left_anti")

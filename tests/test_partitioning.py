@@ -11,13 +11,21 @@ multi-partition input and asserts the barrier is gone, and a
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import json
+import os
 
+import pytest
+
+from museum_image_etl_gridfs_spark import partitioning
 from museum_image_etl_gridfs_spark.catalog import load
 from museum_image_etl_gridfs_spark.operators.dedup import (
     minhash_near_duplicates,
 )
+from museum_image_etl_gridfs_spark.operators.lifecycle import release_checkpoints
 from museum_image_etl_gridfs_spark.partitioning import spread
+from museum_image_etl_gridfs_spark.plans import all_queries
+from tools.check_correctness import compare, duck_connection, normalize
+from tools.make_goldens import FULL_GOLDENS, FULL_SF_DIR, OUT_DIR, full
 
 
 def _physical(df) -> str:
@@ -64,29 +72,28 @@ def test_minhash_has_no_barrier_on_presplit_input(spark, sf_dir, tmp_path):
         docs, "doc_id", "text", k=5, num_hashes=32, bands=8, min_jaccard=0.4
     )
     plan = _physical(pairs)
-    # exactly ONE repartition exchange — the deliberate (band,
-    # band_hash) bucket barrier; the fp-collapse and blocking windows
-    # reuse it (superset keys). The sketch itself no longer appears in
-    # the final plan at all: it ran EXACTLY ONCE into the tracked
-    # localCheckpoint at build time (r13), and every consumer — the
-    # band explode, the star branch, the post-candidate signature
-    # join — is a Scan ExistingRDD of those blocks. No up-front
-    # repartition of (id, text) on a pre-split input: spread() saw a
-    # wide scan and added nothing, so the sketch inherited the scan's
-    # splits (pinned structurally: a REPARTITION_BY_NUM here would
-    # survive into the checkpointed lineage; see the coalesce(1)
-    # branch below where it must appear).
+    # Invariants, not node counts (a benign change in how Spark renders
+    # or re-reads the checkpoint must not fail this test):
+    # - ONE repartition exchange: the deliberate (band, band_hash)
+    #   bucket barrier; the fp-collapse and blocking windows reuse it
+    #   (superset keys). No up-front repartition of (id, text) on a
+    #   pre-split input: spread() saw a wide scan and added nothing, so
+    #   the sketch inherited the scan's splits (pinned structurally: a
+    #   REPARTITION_BY_NUM would survive into the checkpointed lineage;
+    #   see the coalesce(1) branch below where it must appear).
+    # - no MapInArrow: the sketch ran ONCE into the tracked
+    #   localCheckpoint at build time, and every consumer reads its
+    #   blocks — never a re-sketch.
+    # - the signature column does not ride the band fan-out: the
+    #   bucket exchange's input, from the exchange down to the
+    #   checkpoint scan (which lists every column it holds), carries
+    #   only (id, fp, band, band_hash).
     assert plan.count("REPARTITION_BY_COL") == 1
     assert "MapInArrow" not in plan
-    # 4 block reads: band explode, star aggregate, star join side,
-    # signature join — each a Scan ExistingRDD, never a re-sketch
-    assert plan.count("Scan ExistingRDD") == 4
-    # the signature column must NOT ride the band fan-out through the
-    # bucket exchange: the projection feeding REPARTITION_BY_COL
-    # carries only (id, fp, band, band_hash)
-    pre_exchange = plan[: plan.index("REPARTITION_BY_COL")]
-    fanout_project = pre_exchange[pre_exchange.rindex("Project") :]
-    assert "sig" not in fanout_project
+    fanout = plan[plan.index("REPARTITION_BY_COL") :]
+    fanout = fanout[: fanout.index("Scan ExistingRDD")]
+    assert "posexplode" in fanout
+    assert "sig#" not in fanout
     # remaining exchanges are narrow: the star aggregate + join side,
     # the signature join, the block groupBy, and the final pair dedup
     assert plan.count("Exchange hashpartitioning") <= 6
@@ -104,3 +111,104 @@ def test_minhash_has_no_barrier_on_presplit_input(spark, sf_dir, tmp_path):
         )
     )
     assert plan_one.count("REPARTITION_BY_COL") == 1
+
+
+def test_minhash_signature_broadcast_counts_id_width(spark):
+    """The signature gate's estimate includes the id column's bytes: 72
+    docs with 1 MiB string ids make a signature relation above the
+    64 MiB ceiling and get no broadcast hint, while the same docs with
+    ``long`` ids (a few hundred bytes a row) are still broadcast."""
+    from pyspark.sql import functions as F
+
+    text = F.concat_ws(
+        " ",
+        F.lit("alpha beta gamma delta"),
+        (F.col("id") % 5).cast("string"),
+        F.lit("epsilon zeta eta"),
+    )
+    narrow = spark.range(72).select(
+        F.col("id").alias("doc_id"), text.alias("text")
+    )
+    wide = narrow.withColumn(
+        "doc_id",
+        F.concat(F.repeat(F.lit("d"), 1 << 20), F.col("doc_id").cast("string")),
+    )
+
+    def hinted(docs) -> bool:
+        try:
+            pairs = minhash_near_duplicates(
+                docs, "doc_id", "text", k=3, num_hashes=32, bands=8
+            )
+            plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+        finally:
+            release_checkpoints(spark)
+        # the signature join is the query's only hinted join
+        return "strategy=broadcast" in plan
+
+    assert 72 << 20 > partitioning.SIG_BROADCAST_MAX_BYTES
+    assert hinted(narrow)
+    assert not hinted(wide)
+
+
+# ---------------------------------------------------------------------------
+# The scale policy's one predicate, forced to each side
+# ---------------------------------------------------------------------------
+
+#: every registry query that reaches a size gate (partitioning.py's
+#: table): gram inventory, percentile path, vocabulary broadcast,
+#: minhash signature broadcast
+GATED = [
+    "duplicated_spans",
+    "substring_dedup_rewrite",
+    "mad_outlier_quantities",
+    "unigram_lm_scores",
+    "ccnet_perplexity_buckets",
+    "softdedup_weights",
+    "doremi_domain_weights",
+    "minhash_near_dups",
+    "near_dup_clusters",
+    "incremental_minhash_near_dups",
+]
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    con = duck_connection(sf_dir)
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("side", ["small", "large"])
+@pytest.mark.parametrize("name", GATED)
+def test_gated_query_agrees_on_both_sides(
+    spark, sf_dir, duck, monkeypatch, name, side
+):
+    """Force ``partitioning.is_small`` to one answer for every gate the
+    query reaches, and require the oracle's answer (or, for the
+    no-oracle queries, the committed full golden) on both sides. The
+    recorded calls prove the forced predicate was actually consulted."""
+    calls = []
+
+    def forced(estimate, ceiling):
+        calls.append((estimate, ceiling))
+        return side == "small"
+
+    monkeypatch.setattr(partitioning, "is_small", forced)
+    q = all_queries()[name]
+    if q.oracle is None:
+        with open(os.path.join(OUT_DIR, f"{name}_full.json")) as f:
+            want = json.load(f)
+        try:
+            got = full(q.build(spark, FULL_SF_DIR), FULL_GOLDENS[name])
+        finally:
+            release_checkpoints(spark)
+        assert calls, f"{name}: no gate reached"
+        assert got == want
+        return
+    try:
+        got = q.build(spark, sf_dir).toPandas()
+    finally:
+        release_checkpoints(spark)
+    assert calls, f"{name}: no gate reached"
+    want = duck.execute(q.oracle).df()
+    assert compare(normalize(got), normalize(want)) == "OK", name

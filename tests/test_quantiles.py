@@ -4,6 +4,8 @@ remainder-heavy inputs — without ever planning a global window."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -648,6 +650,16 @@ def test_grouped_percentile_multi_p_and_ties(spark):
     )
 
 
+def test_grouped_percentile_equal_neighbours_are_not_interpolated(spark):
+    # p=0.1 over 3 rows sits between two equal 0.1s: Percentile returns
+    # the key itself, while 0.8*0.1 + 0.2*0.1 is 0.10000000000000002
+    df = spark.createDataFrame(
+        [("a", 0.1), ("a", 0.1), ("a", 5.0), ("b", 3.1), ("b", 3.1)],
+        "g string, v double",
+    )
+    _assert_percentiles_match(spark, df, ["g"], "v", [0.1, 0.9])
+
+
 def test_grouped_percentile_single_row_groups(spark):
     df = spark.createDataFrame(
         [("a", 3.7), ("b", 1.1)], "g string, v double"
@@ -669,41 +681,64 @@ def test_grouped_percentile_no_value_buffer_in_plan(spark):
     assert "percentile" not in plan.lower()
 
 
+def _nan_safe(x):
+    """NaN != NaN: compare NaN results by name."""
+    return "NaN" if isinstance(x, float) and math.isnan(x) else x
+
+
+def _auto_gate_inputs():
+    """(case, rows): a plain input, then a NULL value, a NaN value (next
+    to +inf), an all-NULL group, and empty input."""
+    base = [(f"g{i % 3}", 0.1 + 0.2 * ((i * 11) % 19)) for i in range(400)]
+    yield "plain", base
+    yield "null_value", base[:7] + [("g1", None)] + base[8:]
+    yield "nan_value", base[:7] + [("g1", float("nan")), ("g2", float("inf"))] + base[9:]
+    yield "all_null_group", base + [("g_null", None)] * 5
+    yield "empty", []
+
+
 def test_grouped_percentiles_auto_gate_paths_agree(spark):
     """The size gate must be output-invariant: buffer path (Percentile
-    aggregate) and machinery path produce identical raw doubles, and
-    the gate actually switches plans."""
+    aggregate) and machinery path produce identical raw doubles — also
+    on a NULL value, a NaN value, an all-NULL group and empty input —
+    and the gate actually switches plans."""
+    from museum_image_etl_gridfs_spark import partitioning as P
     from museum_image_etl_gridfs_spark.operators import quantiles as Q
 
-    rows = [(f"g{i % 3}", 0.1 + 0.2 * ((i * 11) % 19)) for i in range(400)]
-    df = spark.createDataFrame(rows, "g string, v double").repartition(4)
-
-    def run():
+    def run(df):
         return {
-            r["g"]: (r["a"], r["b"])
+            r["g"]: tuple(_nan_safe(r[c]) for c in "abc")
             for r in Q.grouped_percentiles_auto(
-                df, ["g"], "v", [0.25, 0.9], out_cols=["a", "b"]
+                df, ["g"], "v", [0.25, 0.9, 1.0], out_cols=["a", "b", "c"]
             ).collect()
         }
 
-    # a createDataFrame source is a LogicalRDD: Catalyst estimates it
-    # Long.Max (no stats), so the DEFAULT gate conservatively picks the
-    # bounded machinery — force each side of the gate explicitly
-    mp = __import__("pytest").MonkeyPatch()
-    try:
-        mp.setattr(Q, "PCTL_BUFFER_MAX_BYTES", 1 << 63)
-        fast = run()
-        plan_fast = Q.grouped_percentiles_auto(
+    def plan(df):
+        return Q.grouped_percentiles_auto(
             df, ["g"], "v", [0.5], out_cols=["m"]
-        )._jdf.queryExecution().executedPlan().toString()
-        assert "percentile" in plan_fast.lower()  # below gate: buffer path
+        )._jdf.queryExecution().executedPlan().toString().lower()
 
-        mp.setattr(Q, "PCTL_BUFFER_MAX_BYTES", -1)
-        slow = run()
-        plan_slow = Q.grouped_percentiles_auto(
-            df, ["g"], "v", [0.5], out_cols=["m"]
-        )._jdf.queryExecution().executedPlan().toString()
-        assert "percentile" not in plan_slow.lower()  # above gate
-    finally:
-        mp.undo()
-    assert fast == slow
+    for case, rows in _auto_gate_inputs():
+        df = spark.createDataFrame(rows, "g string, v double").repartition(4)
+        # a createDataFrame source is a LogicalRDD: Catalyst estimates
+        # it Long.Max (no stats), so the DEFAULT gate conservatively
+        # picks the bounded machinery — force each side explicitly
+        mp = pytest.MonkeyPatch()
+        try:
+            mp.setattr(P, "PCTL_BUFFER_MAX_BYTES", 1 << 63)
+            fast = run(df)
+            assert "percentile" in plan(df)  # below gate: buffer path
+
+            mp.setattr(P, "PCTL_BUFFER_MAX_BYTES", -1)
+            slow = run(df)
+            assert "percentile" not in plan(df)  # above gate
+        finally:
+            mp.undo()
+        assert fast == slow, case
+        if case == "all_null_group":
+            assert fast["g_null"] == (None, None, None)
+        elif case == "nan_value":
+            # NaN orders above every number, +inf included
+            assert fast["g1"][2] == "NaN" and fast["g2"][2] == math.inf
+        elif case == "empty":
+            assert fast == {}

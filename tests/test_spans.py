@@ -159,6 +159,7 @@ def test_inventory_checkpoint_gate_paths_agree(spark):
     output-invariant: the checkpointed one-derivation path and the
     above-gate two-pass path yield identical spans. Also pins that the
     gate actually switches (checkpoint plan vs re-derivation plan)."""
+    from museum_image_etl_gridfs_spark import partitioning as P
     from museum_image_etl_gridfs_spark.operators import spans as S
 
     rows = [
@@ -187,12 +188,12 @@ def test_inventory_checkpoint_gate_paths_agree(spark):
     inv_scan = re.compile(r"Scan ExistingRDD\[[^\]]*__gh")
     mp = _pytest.MonkeyPatch()
     try:
-        mp.setattr(S, "_INV_CKPT_MAX_BYTES", 1 << 63)
+        mp.setattr(P, "INVENTORY_CKPT_MAX_BYTES", 1 << 63)
         with_ckpt = run()
         plan_ckpt = S.duplicated_spans(df, k=3)._jdf.queryExecution().executedPlan().toString()
         assert inv_scan.search(plan_ckpt)  # below the gate: materialized
 
-        mp.setattr(S, "_INV_CKPT_MAX_BYTES", 0)
+        mp.setattr(P, "INVENTORY_CKPT_MAX_BYTES", 0)
         without_ckpt = run()
         plan_two_pass = S.duplicated_spans(df, k=3)._jdf.queryExecution().executedPlan().toString()
         assert not inv_scan.search(plan_two_pass)  # above: two-pass
