@@ -86,6 +86,7 @@ def exact_dedup(df: DataFrame, columns: Sequence[str] | None = None) -> DataFram
 # ANSI overflow checking (Spark 4 default).
 _MERSENNE = (1 << 31) - 1
 
+
 def _rand_coeffs(n: int, seed: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for universal hashing, via a simple
     LCG so results are reproducible without numpy on executors."""
@@ -459,7 +460,7 @@ def minhash_near_duplicates(
     # distinct texts — usually a small fraction of the fan-out. The
     # per-doc sig relation reads the checkpoint (never re-sketches);
     # it is broadcast when provably small (the signature gate in
-    # :mod:`..partitioning`: one aggregate job over the checkpoint
+    # ``partitioning.py``: one aggregate job over the checkpoint
     # blocks), else a shuffle join that still moves each signature
     # once instead of ``bands`` times. A row costs the long array plus
     # ~32 bytes of row/array headers, which also cover a fixed-width

@@ -794,7 +794,7 @@ def grouped_percentiles_auto(
 ) -> DataFrame:
     """Exact grouped percentiles with a SCALE-ADAPTIVE plan: while the
     input's plan size is small (the percentile gate in
-    :mod:`..partitioning`), one ``F.percentile`` aggregate (single
+    ``partitioning.py``), one ``F.percentile`` aggregate (single
     pass, per-group value-count map — the measured-fastest exact form
     at every SF the driver benches); above it,
     :func:`grouped_exact_percentiles` (bounded per-task state, no

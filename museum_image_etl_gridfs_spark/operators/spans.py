@@ -79,7 +79,7 @@ def _maybe_checkpoint_inventory(src: DataFrame, occ: DataFrame) -> DataFrame:
     scan + posexplode + window pass (27.1 task-CPU-s at sf0.1 — the #4
     CPU burner in the r12 bench ledger). While the SOURCE relation's
     plan-time size estimate is small (the inventory gate in
-    :mod:`..partitioning`) the inventory is materialized once; above
+    ``partitioning.py``) the inventory is materialized once; above
     it the relation is returned unchanged and the caller's two-pass
     plan stands — its second scan is linear and spill-free (the
     documented 100 TB trade).
